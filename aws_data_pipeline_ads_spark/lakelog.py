@@ -53,6 +53,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_data_pipeline_ads_spark.session import local_frame
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed this version first — re-read and retry."""
@@ -1644,7 +1646,7 @@ class LakeTable:
 
             pinned = T.StructType.fromJson(json.loads(entry["schema"]))
             if not files:
-                return self.spark.createDataFrame([], pinned)
+                return local_frame(self.spark, [], pinned)
             cmap = self._entry_cmap(entry)
             if not cmap:
                 return self.spark.read.schema(pinned).parquet(*files)

@@ -75,6 +75,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_ads_spark.lakelog import CommitBackend, LakeTable
+from aws_data_pipeline_ads_spark.session import local_frame
 
 _DEC = "decimal(38,6)"
 _TXN_PREFIX = "mv-refresh:"
@@ -219,8 +220,7 @@ def _version_delta_sides(source: LakeTable, v_old: int, v_new: int):
         files = [f for f in entry["files"] if f not in prunable]
         if files:
             return source.read_version_files(version, files)
-        return source.spark.createDataFrame(
-            [], source.read(version).schema)
+        return local_frame(source.spark, [], source.read(version).schema)
 
     return side(v_old, e_old), side(v_new, e_new)
 
@@ -946,8 +946,8 @@ class LakeMaterializedView:
             files = self.source._read_entry(head)["files"]
         self.last_recompute_files = list(files)
         if not files:
-            return self._derived(self.spark.createDataFrame(
-                [], self.source.read(head).schema))
+            return self._derived(local_frame(
+                self.spark, [], self.source.read(head).schema))
         return self._derived(
             self.source.read_version_files(head, files))
 
@@ -1184,8 +1184,7 @@ class LakeJoinMaterializedView:
             files = list(entry["files"])
         self.last_fold_files = list(files)
         if not files:
-            return self.spark.createDataFrame(
-                [], self.fact.read(lf).schema)
+            return local_frame(self.spark, [], self.fact.read(lf).schema)
         return self.fact.read_version_files(lf, files)
 
     def _left_flip_delta(self, f_old: DataFrame, d_d: DataFrame,
@@ -1729,8 +1728,7 @@ class LakeStarMaterializedView:
                  else [f for f in entry["files"] if f in keep])
         self.last_fold_files = list(files)
         if not files:
-            return self.spark.createDataFrame(
-                [], self.fact.read(lf).schema)
+            return local_frame(self.spark, [], self.fact.read(lf).schema)
         return self.fact.read_version_files(lf, files)
 
     def _scoped_fact_head(self, touched: DataFrame, head_f: int,
@@ -1783,8 +1781,7 @@ class LakeStarMaterializedView:
             files = self.fact._read_entry(head_f)["files"]
         self.last_recompute_files = list(files)
         if not files:
-            return (self.spark.createDataFrame(
-                [], self.fact.read(head_f).schema)
+            return (local_frame(self.spark, [], self.fact.read(head_f).schema)
                 .select(*res["fact_proj"]))
         return (self.fact.read_version_files(head_f, files)
                 .select(*res["fact_proj"]))

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_data_pipeline_ads_spark.session import local_frame
+
 _DEFAULT_M_BITS = 1 << 20
 _DEFAULT_HASHES = 4
 
@@ -113,7 +115,7 @@ def bloom_words_local(values: DataFrame, col: str,
     (see decontaminate_bloom docstring).
     """
     rows = bloom_words(values, col, m_bits, n_hashes).collect()
-    return values.sparkSession.createDataFrame(rows, schema="widx int, w bigint")
+    return local_frame(values.sparkSession, rows, "widx int, w bigint")
 
 
 def bloom_prefilter(df: DataFrame, col: str, words: DataFrame,
@@ -259,9 +261,9 @@ def bloom_write(values: DataFrame, col: str, path: str,
     words.coalesce(1).write.mode("overwrite").parquet(f"{path}/words")
     fp_n, fp_x = _value_fingerprint(values, col)
     spark = values.sparkSession
-    spark.createDataFrame(
-        [(int(m_bits), int(n_hashes), fp_n, fp_x)],
-        schema="m_bits long, n_hashes int, fp_count long, fp_xor long",
+    local_frame(
+        spark, [(int(m_bits), int(n_hashes), fp_n, fp_x)],
+        "m_bits long, n_hashes int, fp_count long, fp_xor long",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -308,14 +310,14 @@ def bloom_read(spark, path: str) -> tuple[DataFrame, int, int, tuple[int, int]]:
     loc = _local(path)
     if loc is not None:
         meta_d, word_rows = loc
-        words = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in word_rows],
-            schema="widx int, w bigint")
+        words = local_frame(
+            spark, [(int(a), int(b)) for a, b in word_rows],
+            "widx int, w bigint")
         return (words, int(meta_d["m_bits"]), int(meta_d["n_hashes"]),
                 (int(meta_d["fp_count"]), int(meta_d["fp_xor"])))
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     rows = spark.read.parquet(f"{path}/words").collect()
-    words = spark.createDataFrame(rows, schema="widx int, w bigint")
+    words = local_frame(spark, rows, "widx int, w bigint")
     return (words, int(meta.m_bits), int(meta.n_hashes),
             (int(meta.fp_count), int(meta.fp_xor)))
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_ads_spark.pipeline.sink import list_data_files
+from aws_data_pipeline_ads_spark.session import local_frame
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -99,7 +100,7 @@ def compact_files(spark: SparkSession, path: str,
             for key, b in per_dir.items()
         ]
         schema = ", ".join(f"__p_{c} string" for c in partition_cols) + ", __nfiles int"
-        nmap = spark.createDataFrame(rows, schema)
+        nmap = local_frame(spark, rows, schema)
         joined = df
         for c in partition_cols:
             # partition values surface as their read types; compare as

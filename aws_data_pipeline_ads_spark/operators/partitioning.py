@@ -19,12 +19,18 @@ hash shuffle, no global ordering of the full table.
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
+log = logging.getLogger(__name__)
+
+# Bytes of input per widened task. The basis is the optimizer's
+# `sizeInBytes` estimate, which for a parquet scan is the files' on-disk
+# (compressed) bytes, not decoded bytes.
 FAN_OUT_BYTES_PER_TASK = 64 * 1024
 
 
@@ -48,7 +54,8 @@ def fan_out(df: DataFrame, *keys: str, min_tasks: int | None = None,
       partitions — deterministic placement, no sort-before-repartition
       pass; without keys it falls back to round-robin.
 
-    The target is `min(min_tasks or defaultParallelism,
+    The target is `min_tasks` when the caller passes it (an explicit
+    floor wins over the size cap), else `min(defaultParallelism,
     ceil(input_bytes / bytes_per_task))` — SIZE-CAPPED (guide §2,
     r13): widening exists to break 1-task serialization, and its
     benefit saturates long before its per-task cost stops growing.
@@ -66,7 +73,7 @@ def fan_out(df: DataFrame, *keys: str, min_tasks: int | None = None,
     call no-ops). Input bytes come from the optimizer's size estimate
     (`optimizedPlan().stats().sizeInBytes`) — already computed for
     planning; on any stats failure the cap is skipped rather than
-    guessed.
+    guessed, and the failure is logged at WARNING.
 
     The explicit partition COUNT matters: AQE never coalesces a
     user-specified numPartitions, while a bare repartition(col) at this
@@ -80,16 +87,16 @@ def fan_out(df: DataFrame, *keys: str, min_tasks: int | None = None,
       per call — a fixed planning cost paid even when the result is a
       no-op. Call fan_out once per pipeline, on the scan side.
     """
-    spark = df.sparkSession
-    target = min_tasks or spark.sparkContext.defaultParallelism
-    if bytes_per_task:
+    target = min_tasks or df.sparkSession.sparkContext.defaultParallelism
+    if bytes_per_task and not min_tasks:
         try:
             size = int(str(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             ))
             target = min(target, max(1, -(-size // bytes_per_task)))
-        except Exception:  # stats unavailable — widen uncapped
-            pass
+        except Exception as e:  # stats unavailable — widen uncapped
+            log.warning("fan_out: size probe failed, widening uncapped "
+                        "to %d tasks: %s", target, e)
     if df.rdd.getNumPartitions() >= target:
         return df
     if keys:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_ads_spark.functions import cosine_similarity, vec_dot, vec_norm
+from aws_data_pipeline_ads_spark.session import local_frame
 
 EMBED_DIM = 64
 
@@ -853,8 +854,8 @@ def pq_write(embeddings: DataFrame, books: list[list[list[float]]],
         for i, book in enumerate(books)
         for j, c in enumerate(book)
     ]
-    spark.createDataFrame(
-        rows, schema="sub int, code int, centroid array<double>"
+    local_frame(
+        spark, rows, "sub int, code int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
 
 
@@ -1008,12 +1009,13 @@ def ivfpq_write(embeddings: DataFrame, centroids: list[list[float]],
         .parquet(f"{path}/codes")
     )
     spark = embeddings.sparkSession
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, j, c) for i, book in enumerate(books) for j, c in enumerate(book)],
-        schema="sub int, code int, centroid array<double>",
+        "sub int, code int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
-    spark.createDataFrame(
-        [(bool(residual),)], schema="residual boolean"
+    local_frame(
+        spark, [(bool(residual),)], "residual boolean"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 

@@ -17,6 +17,7 @@ from aws_data_pipeline_ads_spark.functions import (
     token_count,
     tokens,
 )
+from aws_data_pipeline_ads_spark.session import local_frame
 
 # Tiny stopword inventories for the n-gram/stopword-hit language heuristic.
 LANG_MARKERS = {
@@ -458,7 +459,7 @@ def _term_buckets(spark, query_terms: list[str]) -> list[int]:
     (bounded driver collect, the IVF-centroid pattern), so writer and
     prober can never drift on hash semantics."""
     rows = (
-        spark.createDataFrame([(t,) for t in query_terms], ["term"])
+        local_frame(spark, [(t,) for t in query_terms], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).alias("tb"))
         .collect()
     )

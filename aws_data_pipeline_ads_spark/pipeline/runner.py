@@ -23,7 +23,9 @@ from aws_data_pipeline_ads_spark.pipeline.quality import remove_duplicates
 from aws_data_pipeline_ads_spark.pipeline.sink import (
     write_manifest, write_partitioned, write_run_summary,
 )
-from aws_data_pipeline_ads_spark.sources.http_json import HttpGet, source_to_df
+from aws_data_pipeline_ads_spark.sources.http_json import (
+    HttpGet, fetch_records, records_to_df,
+)
 from aws_data_pipeline_ads_spark.sources.registry import PipelineConfig
 
 
@@ -84,10 +86,11 @@ def run_pipeline(
     for name, src_cfg in config.sources.items():
         res = SourceResult(source=name)
         try:
-            raw = source_to_df(spark, src_cfg, http_get=http_get)
-            if raw.isEmpty():  # reference skips empty loads (:88,101-102)
+            records = fetch_records(src_cfg, http_get=http_get)
+            if not records:  # reference skips empty loads (:88,101-102)
                 run.results.append(res)
                 continue
+            raw = records_to_df(spark, records)
             shaped = transform_source(raw, name, as_of)
             if config.processing.remove_duplicates:
                 shaped = remove_duplicates(shaped, ["record_id"])

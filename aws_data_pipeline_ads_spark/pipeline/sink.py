@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_data_pipeline_ads_spark.session import local_frame
 from aws_data_pipeline_ads_spark.sources.registry import OutputConfig
 
 SUMMARY_SCHEMA = T.StructType(
@@ -92,7 +93,7 @@ def write_run_summary(spark: SparkSession, summary: dict, path: str) -> str:
         "errors": list(summary.get("errors", [])),
         "duration_seconds": float(summary.get("duration_seconds") or 0.0),
     }
-    df = spark.createDataFrame([row], SUMMARY_SCHEMA)
+    df = local_frame(spark, [row], SUMMARY_SCHEMA)
     df.write.mode("append").partitionBy("date").parquet(path)
     return path
 
@@ -150,7 +151,7 @@ def write_manifest(spark: SparkSession, data_path: str, manifest_path: str,
         {"execution_id": execution_id, "file": f, "n_bytes": n, "modified_ms": m}
         for f, n, m in files
     ]
-    df = spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    df = local_frame(spark, rows, MANIFEST_SCHEMA)
     df.write.mode("append").partitionBy("execution_id").parquet(manifest_path)
     return len(rows)
 

@@ -14,7 +14,7 @@ from aws_data_pipeline_ads_spark.operators.sampling import (
 from aws_data_pipeline_ads_spark.operators.simhash import simhash_pairs_sql, simhash_sql
 from aws_data_pipeline_ads_spark.queries.indexcache import index_path
 from aws_data_pipeline_ads_spark.queries.registry import query
-from aws_data_pipeline_ads_spark.session import ensure_utc
+from aws_data_pipeline_ads_spark.session import ensure_utc, local_frame
 
 _WS = r"\s+"
 
@@ -1096,7 +1096,9 @@ def q_lake_pruned_scan(spark, sf_dir):
 
     idx = lakescan_index(spark, sf_dir)
     t = LakeTable(spark, f"{idx}/tbl")
-    hi = t.read().agg(F.max("doc_id")).collect()[0][0] // 5
+    # the key range's top from the log (LakeTable.stats raises rather
+    # than guess), not a max(doc_id) job over the data
+    hi = t.stats()["max"]["doc_id"] // 5
     return t.scan({"doc_id": (None, hi)}).select(
         "doc_id", F.length("text").cast("long").alias("n_chars"))
 
@@ -1421,8 +1423,8 @@ def q_lake_stats_agg(spark, sf_dir):
     idx = lakestats_index(spark, sf_dir)
     t = LakeTable(spark, f"{idx}/tbl")
     s = t.stats()  # driver-side: one log-entry read, no files opened
-    return spark.createDataFrame(
-        [(s["rows"], s["min"]["doc_id"], s["max"]["doc_id"])],
+    return local_frame(
+        spark, [(s["rows"], s["min"]["doc_id"], s["max"]["doc_id"])],
         "n_rows long, min_id long, max_id long")
 
 
@@ -2548,8 +2550,8 @@ def q_bpe_merges(spark, sf_dir):
                  if merges[i][2] > merges[i - 1][2])
     n_nonpos = sum(1 for _, _, c in merges if c <= 0)
     l0, r0, c0 = merges[0]
-    return spark.createDataFrame(
-        [(len(merges), l0, r0, c0, n_viol, n_nonpos)],
+    return local_frame(
+        spark, [(len(merges), l0, r0, c0, n_viol, n_nonpos)],
         "n_merges long, first_left string, first_right string, "
         "first_count long, n_monotone_violations long, "
         "n_nonpos_counts long",
@@ -2633,8 +2635,8 @@ def q_wordpiece_vocab(spark, sf_dir):
     vocab = m["vocab"]
     l0, r0, s0 = merges[0]
     n_nonpos = sum(1 for _, _, s in merges if s <= 0)
-    return spark.createDataFrame(
-        [(len(merges), l0, r0, float(s0),
+    return local_frame(
+        spark, [(len(merges), l0, r0, float(s0),
           len(vocab) - len(merges), n_nonpos)],
         "n_merges long, first_left string, first_right string, "
         "first_score double, n_alphabet long, n_nonpos_scores long",
@@ -2771,8 +2773,8 @@ def q_unigram_tok_vocab(spark, sf_dir):
     n_over_len = sum(1 for p, _ in vocab if len(p) > 5)
     n_nonfinite = sum(1 for _, lp in vocab
                       if not (math.isfinite(lp) and lp < 0))
-    return spark.createDataFrame(
-        [(n_single, n_over_target, n_oov, n_over_len, n_nonfinite)],
+    return local_frame(
+        spark, [(n_single, n_over_target, n_oov, n_over_len, n_nonfinite)],
         "n_single long, n_over_target long, n_oov_pieces long, "
         "n_over_max_len long, n_nonfinite long")
 
@@ -3387,8 +3389,8 @@ def q_lake_sum_agg(spark, sf_dir):
     idx = lakesum_index(spark, sf_dir)
     t = LakeTable(spark, f"{idx}/tbl")
     s = t.stats()  # driver-side: one log-entry read, no files opened
-    return spark.createDataFrame(
-        [(s["rows"], s["sum"]["n_chars"], s["sum"]["n_chars"] / s["rows"])],
+    return local_frame(
+        spark, [(s["rows"], s["sum"]["n_chars"], s["sum"]["n_chars"] / s["rows"])],
         "n_rows long, total_chars double, avg_chars double")
 
 
@@ -4870,7 +4872,7 @@ def q_lake_expectations(spark, sf_dir):
         .groupBy("r").count().collect())
     rows = ([("rows_committed", n_ok), ("rows_quarantined", n_bad)]
             + [(f"viol:{r}", int(c)) for r, c in sorted(per_rule.items())])
-    return spark.createDataFrame(rows, "metric string, value long")
+    return local_frame(spark, rows, "metric string, value long")
 
 
 # KMV-sketch COUNT(DISTINCT) MV: append-only source, so the refresh

@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from aws_data_pipeline_ads_spark.session import local_frame
 from aws_data_pipeline_ads_spark.sources.registry import SourceConfig
 
 # http_get(url, timeout) -> (status_code, body_text)
@@ -102,8 +103,8 @@ def hardened_http_get(url: str, timeout: float,
     """Drop-in HttpGet that walks the transport ladder: each transport's
     failure is recorded and the next one tries; the terminal error names
     every hop so a broken-cert endpoint is diagnosable, not a bare
-    SSLError. Pass as `http_get=hardened_http_get` to fetch_records /
-    source_to_df for hostile-TLS environments.
+    SSLError. Pass as `http_get=hardened_http_get` to fetch_records (or
+    run_pipeline) for hostile-TLS environments.
 
     Certificate verification is never skipped unless the caller opts in
     with `allow_insecure=True`; when the noverify rung does serve a
@@ -177,37 +178,39 @@ def records_to_df(
 ) -> DataFrame:
     """Land fetched records as a DataFrame.
 
-    Records go through a JSON round-trip + `spark.read.json` so nested
+    Each record is serialized to one JSON string and the strings become
+    a one-column frame through `session.local_frame` (a JVM local
+    relation, no RDD). With no schema, the JSON reader infers one from
+    those strings read as a JVM `Dataset[String]`, so nested
     dicts/lists infer to structs/arrays exactly like file-landed raw
-    JSON would — one ingest semantics for both paths. Pass an explicit
-    schema to harden (PERMISSIVE mode keeps malformed rows in
-    _corrupt_record instead of failing the batch — reference
-    continue-on-error semantics, :104-110).
+    JSON would (one ingest semantics for both paths). The strings are
+    then parsed with `from_json` under that schema, or under an explicit
+    one passed to harden; PERMISSIVE mode keeps malformed rows in
+    _corrupt_record instead of failing the batch (reference
+    continue-on-error semantics, :104-110). Schema inference is the one
+    job this runs, and no action over the result starts a Python worker.
     """
-    payload = [json.dumps(r, default=str) for r in records]
-    rdd_like = spark.createDataFrame([(p,) for p in payload], ["json"])
-    reader_schema = schema
-    if reader_schema is not None and "_corrupt_record" not in reader_schema.fieldNames():
-        reader_schema = T.StructType(
-            list(reader_schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-        )
     from pyspark.sql import functions as F
 
-    if reader_schema is None:
-        return spark.read.json(rdd_like.rdd.map(lambda r: r.json))
-    return (
-        rdd_like.select(
-            F.from_json("json", reader_schema, {"mode": "PERMISSIVE"}).alias("rec")
-        ).select("rec.*")
-    )
+    if schema is None:
+        # the JSON reader lands a top-level array of objects as one row
+        # per element, which from_json does not: expand such records
+        records = [x for r in records
+                   for x in (r if isinstance(r, list)
+                             and all(isinstance(e, dict) for e in r) else [r])]
+    strings = local_frame(
+        spark, [(json.dumps(r, default=str),) for r in records], "json string")
+    if schema is None:
+        jds = getattr(strings._jdf, "as")(
+            spark._jvm.org.apache.spark.sql.Encoders.STRING())
+        schema = DataFrame(spark._jsparkSession.read().json(jds), spark).schema
+        if not schema.fields:  # nothing but empty objects/nulls: no columns
+            return strings.select()
+    elif "_corrupt_record" not in schema.fieldNames():
+        schema = T.StructType(
+            list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
+        )
+    return strings.select(
+        F.from_json("json", schema, {"mode": "PERMISSIVE"}).alias("rec")
+    ).select("rec.*")
 
-
-def source_to_df(
-    spark: SparkSession,
-    cfg: SourceConfig,
-    limit: int | None = None,
-    schema: T.StructType | None = None,
-    http_get: HttpGet | None = None,
-) -> DataFrame:
-    """extract_data equivalent: fetch one source into a DataFrame."""
-    return records_to_df(spark, fetch_records(cfg, limit, http_get), schema)

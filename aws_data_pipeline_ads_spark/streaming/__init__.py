@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_pipeline_ads_spark.functions import dec_sum
+from aws_data_pipeline_ads_spark.session import local_frame
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,7 +198,7 @@ def curation_ingest(docs_stream: DataFrame, out_path: str, seen_path: str,
             # disable dedup and append duplicates to the corpus.
             if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
                 raise
-            seen = spark.createDataFrame([], "content_hash string")
+            seen = local_frame(spark, [], "content_hash string")
         flags = incremental_exact_dedup(ok, seen)
         kept = ok.join(flags.filter(SF.col("keep")), "doc_id").select(
             batch_df.columns + ["content_hash"]

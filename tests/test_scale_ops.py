@@ -208,16 +208,48 @@ def test_fan_out_size_cap(spark, sf_dir):
     assert wide.rdd.getNumPartitions() == max(
         par, docs.rdd.getNumPartitions())
 
-    # intermediate: the target is ceil(size/bytes_per_task), never more
-    half = -(-size // ((size // max(2, min(par, 4))) or 1))
-    mid = fan_out(docs, "doc_id",
-                  bytes_per_task=(size // max(2, min(par, 4))) or 1)
-    assert mid.rdd.getNumPartitions() <= max(
+    # intermediate: the target is exactly min(cores, ceil(size/bytes_per_task)),
+    # and a plan already that wide is left alone
+    per_task = (size // max(2, min(par, 4))) or 1
+    half = -(-size // per_task)
+    mid = fan_out(docs, "doc_id", bytes_per_task=per_task)
+    assert mid.rdd.getNumPartitions() == max(
         docs.rdd.getNumPartitions(), min(par, half))
+
+    # an explicit min_tasks wins over the size cap
+    floor = docs.rdd.getNumPartitions() + 3
+    forced = fan_out(docs, "doc_id", min_tasks=floor, bytes_per_task=size + 1)
+    assert forced.rdd.getNumPartitions() == floor
 
     # results are partitioning-invariant under the cap
     assert sorted(r.doc_id for r in capped.select("doc_id").collect()) == \
         sorted(r.doc_id for r in wide.select("doc_id").collect())
+
+
+def test_fan_out_logs_a_failed_size_probe(spark, caplog):
+    """A failed size probe widens uncapped, and says so at WARNING."""
+    import logging
+
+    from aws_data_pipeline_ads_spark.operators.partitioning import fan_out
+
+    df = spark.range(10).coalesce(1)
+
+    class Unsized:
+        sparkSession = df.sparkSession
+        rdd = df.rdd
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("no stats")
+
+        def repartition(self, *args):
+            return df.repartition(*args)
+
+    with caplog.at_level(logging.WARNING,
+                         logger="aws_data_pipeline_ads_spark.operators.partitioning"):
+        out = fan_out(Unsized(), "id")
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert "size probe failed" in caplog.text and "no stats" in caplog.text
 
 
 def test_interval_join_binned_equals_naive_and_no_nested_loop(spark):
